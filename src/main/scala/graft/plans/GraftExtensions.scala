@@ -7,13 +7,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 
-/** Planner strategy: [[SkylinePlan]] → [[SkylineExec]],
+/** Planner strategy: [[SkylinePlan]] → a final [[SkylineExec]] over a
+  * partial one (EnsureRequirements adds the sorts and the exchange),
   * [[SkycubePlan]] → [[SkycubeExec]].
   */
 object SkylineStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case sky @ SkylinePlan(_, _, child) =>
-      SkylineExec(sky.dims, planLater(child)) :: Nil
+    case SkylinePlan(dims, groups, child) =>
+      val partial = SkylineExec(dims, groups, partial = true, planLater(child))
+      SkylineExec(dims, groups, partial = false, partial) :: Nil
     case cube: SkycubePlan =>
       val names = cube.dimExprs.map {
         case a: org.apache.spark.sql.catalyst.expressions.NamedExpression => a.name
@@ -26,15 +28,15 @@ object SkylineStrategy extends SparkStrategy {
 
 /** Column pruning through [[SkylinePlan]]: when a Project above the
   * skyline uses a subset of the child's columns, push a Project BELOW
-  * the skyline keeping only (projected ∪ dim) columns — the scan then
+  * the skyline keeping only (projected ∪ dim ∪ group-key) columns — the scan then
   * prunes to those columns (ReadSchema shrinks). Safe because skyline
-  * filters rows and never reads columns outside its dims.
+  * filters rows and never reads columns outside its dims and group keys.
   */
 object SkylineColumnPruning extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case p @ Project(projectList, sky @ SkylinePlan(dimExprs, _, child))
+    case p @ Project(projectList, sky @ SkylinePlan(_, _, child))
         if sky.resolved && p.resolved => {
-      val needed = p.references ++ AttributeSet(dimExprs.flatMap(_.references))
+      val needed = p.references ++ sky.references
       val keep = child.output.filter(needed.contains)
       if (keep.length < child.output.length)
         Project(projectList, sky.copy(child = Project(keep, child)))

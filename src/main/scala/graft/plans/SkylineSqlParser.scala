@@ -35,7 +35,7 @@ class SkylineSqlParser(delegate: ParserInterface) extends ParserInterface {
       SkycubePlan(dims.map(_._1), dims.map(_._2), delegate.parsePlan(base))
     case SkylineClause(base, clause) =>
       val dims = parseDims(clause)
-      SkylinePlan(dims.map(_._1), dims.map(_._2), delegate.parsePlan(base))
+      SkylinePlan(dims, delegate.parsePlan(base))
     case _ => delegate.parsePlan(sqlText)
   }
 

@@ -46,10 +46,9 @@ private[graft] object RegSkyline {
 
     // Flagship skyline (GSKY two-phase), scoped to one returnflag so the
     // DuckDB NOT-EXISTS oracle stays cheap at sf0.01.
-    // Output columns are projected BEFORE the operator: the skyline
-    // carries whole rows through an opaque mapPartitions, so Catalyst
-    // cannot prune through it — projecting early is what gets
-    // ReadSchema down to the 5 needed columns at the parquet scan.
+    // Output columns are projected BEFORE the operator, which carries
+    // whole rows — projecting early is what gets ReadSchema down to the
+    // 5 needed columns at the parquet scan.
     "q_skyline_lineitem" -> { (s, dir) =>
       val li = Tables.load(s, dir, "lineitem").filter(col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_shipdate")
@@ -170,18 +169,16 @@ private[graft] object RegSkyline {
     },
 
 
-    // Same dominance semantics through the native Catalyst aggregate
-    // (SkylineAgg: TypedImperativeAggregate with partial/merge + kryo
-    // buffer serialization) — grouped by priority so the merge path
-    // crosses a real keyed exchange. This is the spill-safe/AQE form;
-    // the round-2 serialization bug lived here, so it faces the oracle,
-    // not just SkylineAggSpec.
+    // Same dominance semantics per order priority: the grouped
+    // operator (SkylineOp.grouped — a partial skyline per partition and
+    // priority, then one exchange keyed by priority carrying only the
+    // local survivors), so the merge crosses a real keyed exchange.
     "q_skyline_agg" -> { (s, dir) =>
       val o = Tables.load(s, dir, "orders")
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "o_orderdate")
-      SkylineOp.viaAggregate(o,
+      SkylineOp.grouped(o,
         SkylineSpec(Seq(SkyDim("o_totalprice", Min), SkyDim("o_orderdate", Max))),
-        groupCols = Seq("o_orderpriority"))
+        Seq("o_orderpriority"))
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "o_orderdate")
         .orderBy("o_orderpriority", "o_orderkey")
     },
@@ -244,7 +241,7 @@ private[graft] object RegSkyline {
     // shuffle; see SkylineOp.grouped).
     "q_skyline_events" -> { (s, dir) =>
       val e = Tables.loadEvents(s, dir)
-        .select("event_id", "event_type", "value", "ts") // prune before the opaque op
+        .select("event_id", "event_type", "value", "ts") // prune before the operator
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
       SkylineOp.grouped(e,
         SkylineSpec(Seq(SkyDim("value", Max), SkyDim("ts", Min))),
@@ -441,7 +438,7 @@ private[graft] object RegSkyline {
     // The declarative anti-join skyline (p ∈ sky ⟺ no q dominates p,
     // planned as a broadcast nested-loop anti-join) — the O(n²)
     // cross-check form, registered on a deliberately small slice; the
-    // imperative paths (twoPhase/SkyMr/agg) are the scale plans.
+    // imperative paths (twoPhase/grouped/SkyMr) are the scale plans.
     "q_skyline_anti" -> { (s, dir) =>
       val p = Tables.load(s, dir, "part").filter(col("p_brand") === "Brand#13")
         .select("p_partkey", "p_retailprice", "p_size")

@@ -9,9 +9,10 @@ import org.apache.spark.sql.Row
   *
   * The key algebraic property (what makes skyline a distributable,
   * combiner-friendly aggregate): `sky(A ∪ B) = sky(sky(A) ∪ sky(B))`.
-  * `insert` is the reduce step; folding one buffer into another is the
-  * merge step. The reference exploits the same property by registering
-  * its reducer as a Hadoop combiner (Skyline.java:408).
+  * `insert` is the reduce step; re-running it over local survivors is
+  * the merge step (graft.plans.SkylineExec's partial and final nodes).
+  * The reference exploits the same property by registering its reducer
+  * as a Hadoop combiner (Skyline.java:408).
   *
   * Streaming-friendly: consumes an Iterator, holds only the current
   * skyline candidates in memory — never the whole group.
@@ -60,24 +61,6 @@ object Gsky {
     buf += ((v, p))
   }
 
-  /** Merge two skyline buffers (the "combiner"/partial-agg step).
-    * NOTE: BOTH input buffers are invalidated by this call — the larger
-    * one is mutated in place and returned, the smaller is consumed.
-    * Only the return value may be used afterwards.
-    */
-  def merge[P](into: Buf[P], from: Buf[P],
-      cap: Int = DefaultMaxBufferSize): Buf[P] = {
-    // Fold the smaller buffer into the larger one.
-    val (big, small) = if (into.length >= from.length) (into, from) else (from, into)
-    var i = 0
-    while (i < small.length) {
-      val (v, p) = small(i)
-      insert(big, v, p, cap)
-      i += 1
-    }
-    big
-  }
-
   /** Skyline of an iterator of (vector, payload). */
   def skyline[P](it: Iterator[(Array[Double], P)],
       cap: Int = DefaultMaxBufferSize): Buf[P] = {
@@ -88,13 +71,6 @@ object Gsky {
     }
     buf
   }
-
-  /** Skyline over Rows that carry their normalized vector in an
-    * array<double> column at `skyIdx`. Used by the DataFrame operators.
-    */
-  def skylineRows(rows: Iterator[Row], skyIdx: Int,
-      cap: Int = DefaultMaxBufferSize): Iterator[Row] =
-    skyline(rows.map(r => (vecOf(r, skyIdx), r)), cap).iterator.map(_._2)
 
   @inline def vecOf(r: Row, skyIdx: Int): Array[Double] = {
     val s = r.getSeq[Double](skyIdx)

@@ -217,21 +217,11 @@ object SkyMr {
     val cellIdx = schema.fieldIndex(CELL)
 
     // -- 4. phase 1: local skyline per cell, with map-side combine ------
-    def perCellSky(it: Iterator[Row]): Iterator[Row] = {
-      val bufs = mutable.HashMap.empty[Int, Gsky.Buf[Row]]
-      it.foreach { r =>
-        Gsky.insert(bufs.getOrElseUpdate(r.getInt(cellIdx), Gsky.emptyBuf[Row]),
-          Gsky.vecOf(r, skyIdx), r)
-      }
-      bufs.valuesIterator.flatMap(_.iterator.map(_._2))
-    }
-    // SFS presort before each GSKY pass (SkylineOp.sfsSorted): global
-    // ascending-sum order is ascending within every cell's buffer too.
-    val localSky = SkylineOp.sfsSorted(routed)
-      .mapPartitions(perCellSky _)(enc) // combiner: shuffle only local-sky survivors
-      .repartition(col(CELL))
-      .transform(SkylineOp.sfsSorted)
-      .mapPartitions(perCellSky _)(enc)
+    // One SkylinePlan grouped by cell over the already-normalized
+    // vector: a partial skyline per (partition, cell), then an exchange
+    // on the cell carrying only local-sky survivors, both SFS-presorted.
+    val localSky = SkylineOp.planned(routed,
+      (0 until d).map(i => col(SkylineOp.SKY)(i)), Seq(col(CELL)))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // -- 5. VPn + per-dim argmin sky-filter points (cell metadata only) --

@@ -1,8 +1,10 @@
 package graft.skyline
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, DoubleType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.graftbridge.{ColumnBridge, DatasetBridge}
+import org.apache.spark.sql.types.DoubleType
+import graft.plans.{SkylineDim, SkylinePlan}
 
 /** Public skyline operator over DataFrames.
   *
@@ -19,8 +21,13 @@ import org.apache.spark.sql.types.{DateType, DoubleType, TimestampNTZType, Times
   *    local skylines are large and the final merge needs real
   *    parallelism.
   *
-  * Semantics (both paths): strict Pareto dominance, ties kept, rows with
-  * any NULL/sentinel dim excluded — see [[SkylineSpec]].
+  * [[twoPhase]], [[grouped]], SkyMr's per-cell phase 1 and the
+  * `SKYLINE OF` clause all plan through one logical node,
+  * [[graft.plans.SkylinePlan]], executed as a partial and a final
+  * [[graft.plans.SkylineExec]] over SFS-presorted input.
+  *
+  * Semantics (all paths): strict Pareto dominance, ties kept, rows with
+  * any NULL/NaN/sentinel dim excluded — see [[SkylineSpec]].
   */
 object SkylineOp {
 
@@ -30,17 +37,12 @@ object SkylineOp {
   /** Normalized (MIN-convention, sentinel→null) dim expressions.
     * Temporal types are mapped to their epoch numeric (order-preserving)
     * so dominance compares them like any other dim; the original column
-    * values pass through untouched in the output.
+    * values pass through untouched in the output. Dims of any other
+    * type fail analysis ([[graft.plans.SkylineDim]]).
     */
   def normalizedDims(df: DataFrame, spec: SkylineSpec): Seq[Column] =
     spec.dims.map { dim =>
-      val base = df.schema(dim.col).dataType match {
-        case TimestampType => unix_micros(col(dim.col)).cast(DoubleType)
-        case TimestampNTZType =>
-          unix_micros(col(dim.col).cast(TimestampType)).cast(DoubleType)
-        case DateType => unix_date(col(dim.col)).cast(DoubleType)
-        case _ => col(dim.col).cast(DoubleType)
-      }
+      val base = ColumnBridge.column(SkylineDim(ColumnBridge.resolvedExpression(col(dim.col))))
       val nulled = dim.missing match {
         case Some(s) => when(base === lit(s), lit(null).cast(DoubleType)).otherwise(base)
         case None => base
@@ -48,51 +50,55 @@ object SkylineOp {
       nulled * lit(dim.dir.sign)
     }
 
-  /** Append the normalized vector column and drop incomplete rows.
-    * The completeness filter is a plain Catalyst predicate — it is
-    * pushed below the exchange (and into parquet for source columns).
-    * NaN dims are excluded along with NULLs: NaN compares as
-    * "incomparable to everything" in [[Dominance.compare]], which would
-    * let NaN rows survive every skyline — treat them as missing instead.
+  /** Rows whose every normalized dim is present. NaN dims are excluded
+    * along with NULLs: NaN compares as "incomparable to everything" in
+    * [[Dominance.compare]], which would let NaN rows survive every
+    * skyline — treat them as missing instead. A plain Catalyst
+    * predicate, so it is pushed below exchanges (and into parquet for
+    * source columns).
     */
+  private def complete(dims: Seq[Column]): Column =
+    dims.map(d => d.isNotNull && !isnan(d)).reduce(_ && _)
+
+  /** Append the normalized vector column and drop incomplete rows. */
   def prepare(df: DataFrame, spec: SkylineSpec): DataFrame = {
     val dims = normalizedDims(df, spec)
-    df.filter(dims.map(d => d.isNotNull && !isnan(d)).reduce(_ && _))
-      .withColumn(SKY, array(dims: _*))
+    df.filter(complete(dims)).withColumn(SKY, array(dims: _*))
   }
 
   def skyline(df: DataFrame, spec: SkylineSpec): DataFrame = twoPhase(df, spec)
 
   /** SFS presort (sort-filter-skyline, Chomicki et al. '03): order each
-    * partition by ascending sum of the MIN-normalized dims before the
-    * GSKY pass. A dominator is ≤ in every normalized dim and < in at
-    * least one, so its sum is strictly smaller — it always sorts before
-    * its victims. Consequences: the insert buffer only ever grows (the
-    * eviction branch never fires), and the strongest dominators sit at
-    * the front of the buffer, so the dominated-check early-exit fires
-    * sooner. Measured 3.2× on the 9-dim GSOD shape (tools/SfsProbe:
-    * 21.2 s → 6.7 s over 200k points, identical skylines); the
-    * per-partition SortExec is spillable and order-independent of the
-    * result (skyline is a set).
+    * partition by ascending sum of the MIN-normalized dims before a
+    * GSKY pass over [[prepare]]d rows, for the operators that run their
+    * own pass (Skyband, Skycube). A dominator's sum is
+    * never larger than its victim's, so it almost always sorts first:
+    * the insert buffer rarely evicts, and the strongest dominators sit
+    * at the front of the buffer, so the dominated-check early-exit fires
+    * sooner. Measured 3.2× on the 9-dim GSOD shape (OPTIMIZATION_r16.md).
+    * [[SkylinePlan]] gets the same order from SkylineExec's required
+    * child ordering.
     */
   private[skyline] def sfsSorted(prep: DataFrame): DataFrame =
     prep.sortWithinPartitions(aggregate(col(SKY), lit(0.0), (a, x) => a + x))
 
+  /** Skyline of `df` over MIN-convention DOUBLE `dims`, one per group of
+    * `groups`: a [[SkylinePlan]] on top of `df`'s plan. */
+  private[skyline] def planned(df: DataFrame, dims: Seq[Column], groups: Seq[Column]): DataFrame = {
+    graft.sql.SkylineSql.register(df.sparkSession)
+    DatasetBridge.ofRows(df.sparkSession, SkylinePlan(dims.map(ColumnBridge.resolvedExpression),
+      groups.map(ColumnBridge.resolvedExpression), df.queryExecution.analyzed))
+  }
+
   /** Local-skyline-then-merge plan. Phase 1 runs GSKY per input
     * partition with no shuffle; phase 2 shuffles only the survivors
     * (orders of magnitude smaller) into one task for the final GSKY.
-    * `repartition(1)` (not `coalesce(1)`) keeps phase 1 parallel.
     */
   def twoPhase(df: DataFrame, spec: SkylineSpec): DataFrame = {
+    val dims = normalizedDims(df, spec)
     // Spread an under-partitioned input before the CPU-bound local
     // pass (no-op at real scale; see Partitioning.parallelize).
-    val prep = graft.util.Partitioning.parallelize(prepare(df, spec))
-    val enc = Encoders.row(prep.schema)
-    val skyIdx = prep.schema.fieldIndex(SKY)
-    val local = sfsSorted(prep).mapPartitions((it: Iterator[Row]) => Gsky.skylineRows(it, skyIdx))(enc)
-    val merged = sfsSorted(local.repartition(1))
-      .mapPartitions((it: Iterator[Row]) => Gsky.skylineRows(it, skyIdx))(enc)
-    merged.drop(SKY)
+    planned(graft.util.Partitioning.parallelize(df.filter(complete(dims))), dims, Nil)
   }
 
   /** Per-group skyline: one independent skyline per distinct value of
@@ -100,60 +106,20 @@ object SkylineOp {
     *
     * Plan: map-side partial skyline per (partition × group) — the
     * combiner trick from [[SkyMr]] — then one shuffle on the group key
-    * and a final per-group GSKY. Groups are processed independently
-    * within a partition via a hash map of buffers, so one task handles
-    * many groups (no one-task-per-group explosion); parallelism scales
-    * with the group-key cardinality, which is the natural partitioning
-    * at 100 TB.
+    * and a final per-group GSKY. Input sorted by (group, SFS sum) lets
+    * one task finish many groups one after another (no
+    * one-task-per-group explosion); parallelism scales with the
+    * group-key cardinality, which is the natural partitioning at 100 TB.
     */
   def grouped(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String]): DataFrame = {
     // No Partitioning.parallelize here: interleaved A/B on the sf0.1
-    // events workload (tools/EventsSkyProbe, min-of-3) measured the
+    // events workload (min-of-3, OPTIMIZATION_r16.md) measured the
     // spread at 0.86-0.90s vs 0.44s without — the extra plan + input
     // shuffle buys nothing because the phase-1 combiner is cheap at
-    // low d and the phase-2 repartition(groupCols) restores full
-    // parallelism regardless. The SFS sorts are kept: free at d=2
-    // (0.44s with == without), 3.2× at d=9 (tools/SfsProbe).
-    val prep = prepare(df, spec)
-    val enc = Encoders.row(prep.schema)
-    val skyIdx = prep.schema.fieldIndex(SKY)
-    val gIdx = groupCols.map(prep.schema.fieldIndex)
-    def perGroupSky(it: Iterator[Row]): Iterator[Row] = {
-      val bufs = scala.collection.mutable.HashMap.empty[Seq[Any], Gsky.Buf[Row]]
-      it.foreach { r =>
-        val key = gIdx.map(r.get)
-        Gsky.insert(bufs.getOrElseUpdate(key, Gsky.emptyBuf[Row]), Gsky.vecOf(r, skyIdx), r)
-      }
-      bufs.valuesIterator.flatMap(_.iterator.map(_._2))
-    }
-    // SFS order is global, hence also ascending within every group —
-    // each group's buffer gets the no-eviction/early-exit benefit.
-    sfsSorted(prep)
-      .mapPartitions(perGroupSky _)(enc) // combiner: shuffle only local survivors
-      .repartition(groupCols.map(col): _*)
-      .transform(sfsSorted)
-      .mapPartitions(perGroupSky _)(enc)
-      .drop(SKY)
-  }
-
-  /** Skyline through the native Catalyst aggregate ([[SkylineAgg]]):
-    * `agg(skyline(vec, struct(*)))` → explode. The aggregate framework
-    * supplies partial (map-side) aggregation, spill-safe buffers and
-    * AQE integration; rows never leave InternalRow form until the
-    * final explode. Optionally grouped — each group gets its own
-    * independent skyline, all through one keyed exchange.
-    */
-  def viaAggregate(df: DataFrame, spec: SkylineSpec, groupCols: Seq[String] = Nil): DataFrame = {
-    val prep = graft.util.Partitioning.parallelize(prepare(df, spec))
-    val dataCols = prep.columns.filter(_ != SKY)
-    val rowStruct = struct(dataCols.map(col): _*)
-    val agg = SkylineAgg(col(SKY), rowStruct).as("__sky_rows")
-    val grouped =
-      if (groupCols.isEmpty) prep.agg(agg)
-      else prep.groupBy(groupCols.map(col): _*).agg(agg)
-    grouped
-      .select(explode(col("__sky_rows")).as("__sky_row"))
-      .select(dataCols.map(c => col(s"__sky_row.$c")): _*)
+    // low d and the phase-2 exchange on groupCols restores full
+    // parallelism regardless.
+    val dims = normalizedDims(df, spec)
+    planned(df.filter(complete(dims)), dims, groupCols.map(col))
   }
 
   /** Declarative (anti-join) skyline, for small/medium inputs and as a

@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge into the `private[sql]` Column ↔ Expression converters —
   * Spark 4 removed the public `new Column(expr)` constructor, so a
   * library registering its own Catalyst expressions (graft's
-  * SkylineAgg) needs this one-hop accessor in the sql package.
+  * SkylineDim) needs this one-hop accessor in the sql package.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

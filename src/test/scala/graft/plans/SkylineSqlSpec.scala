@@ -45,6 +45,47 @@ class SkylineSqlSpec extends SparkSpec {
     }
   }
 
+  test("dim types without an order fail analysis, naming column and type") {
+    Seq((1L, "abc", 1.0), (2L, "9", 2.0), (3L, "10", 3.0)).toDF("id", "name", "x")
+      .createOrReplaceTempView("named")
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      SkylineSql.sql(spark, "SELECT * FROM named SKYLINE OF name MIN, x MIN")
+    }
+    assert(ex.getMessage.contains("name\" has the type \"STRING\""), ex.getMessage)
+    // The DataFrame API shares the check (SkylineDim).
+    val ex2 = intercept[org.apache.spark.sql.AnalysisException] {
+      SkylineOp.skyline(spark.table("named"), SkylineSpec.min("name", "x"))
+    }
+    assert(ex2.getMessage.contains("name\" has the type \"STRING\""), ex2.getMessage)
+  }
+
+  test("plan pin: SortExec under both SkylineExecs, SinglePartition below final") {
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    fixture().repartition(3).createOrReplaceTempView("items")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val df = SkylineSql.sql(spark,
+        "SELECT id, price, rating FROM items SKYLINE OF price MIN, rating MAX")
+      def below(p: SparkPlan): SparkPlan = p.children.head match {
+        case w: WholeStageCodegenExec => below(w)
+        case i: InputAdapter => below(i)
+        case c => c
+      }
+      val finalSky = df.queryExecution.executedPlan.collectFirst { case s: SkylineExec => s }.get
+      assert(!finalSky.partial)
+      val sort1 = below(finalSky).asInstanceOf[SortExec]
+      val exchange = below(sort1).asInstanceOf[ShuffleExchangeExec]
+      assert(exchange.outputPartitioning == SinglePartition)
+      val partialSky = below(exchange).asInstanceOf[SkylineExec]
+      assert(partialSky.partial)
+      assert(below(partialSky).isInstanceOf[SortExec], df.queryExecution.executedPlan.toString)
+      assert(df.count() > 0)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("'skyline of' inside a string literal does not hijack the statement") {
     Seq((1L, "contains skyline of stuff"), (2L, "plain")).toDF("id", "body")
       .createOrReplaceTempView("notes")
@@ -76,7 +117,7 @@ class SkylineSqlSpec extends SparkSpec {
     val pruned = SkylineColumnPruning(
       org.apache.spark.sql.catalyst.plans.logical.Project(
         Seq(plan.output.head),
-        SkylinePlan(Seq(plan.output(1)), Seq(1), plan)))
+        SkylinePlan(Seq((plan.output(1), 1)), plan)))
     // child of SkylinePlan must now be a Project keeping id+price only
     val sky = pruned.collectFirst { case s: SkylinePlan => s }.get
     assert(sky.child.output.map(_.name).toSet == Set("id", "price"))

@@ -37,9 +37,9 @@ class GskySpec extends AnyFunSuite {
     val rnd = new Random(7)
     cases(300) { ps =>
       val (a, b) = ps.partition(_ => rnd.nextBoolean())
-      val merged = Gsky.merge(
-        Gsky.skyline(a.iterator.map(v => (v, ()))),
-        Gsky.skyline(b.iterator.map(v => (v, ()))))
+      val merged = Gsky.skyline(
+        Gsky.skyline(a.iterator.map(v => (v, ()))).iterator ++
+          Gsky.skyline(b.iterator.map(v => (v, ()))).iterator)
       assert(canon(merged.toSeq.map(_._1)) == canon(brute(ps)))
     }
   }
@@ -75,11 +75,11 @@ class GskySpec extends AnyFunSuite {
       Gsky.skyline(anti, cap = 100)
     }
     assert(ex.getMessage.contains("anti-correlated"))
-    // The merge path also guards: two under-cap halves can't silently
+    // The merge pass also guards: two under-cap halves can't silently
     // combine past the cap.
     val a = Gsky.skyline((0 until 90).iterator.map(i => (Array(i.toDouble, (500 - i).toDouble), i)), cap = 100)
     val b = Gsky.skyline((90 until 180).iterator.map(i => (Array(i.toDouble, (500 - i).toDouble), i)), cap = 100)
-    intercept[IllegalStateException] { Gsky.merge(a, b, cap = 100) }
+    intercept[IllegalStateException] { Gsky.skyline(a.iterator ++ b.iterator, cap = 100) }
   }
 
   test("correlated data stays far under the default cap") {
